@@ -109,7 +109,8 @@ def main() -> None:
         "Phrase top-k (positional, vectorized)", p,
         [
             ("no per-doc applyInPandas groups", "FlatMapGroupsInPandas" not in p),
-            ("decode+verify are Arrow mapInPandas stages", p.count("MapInPandas") >= 2),
+            ("decode is an Arrow mapInArrow stage", p.count("MapInArrow") >= 1),
+            ("verify is an Arrow mapInPandas stage", p.count("MapInPandas") >= 1),
             ("single doc_id repartition between them", "hashpartitioning(doc_id" in p),
         ],
     ))
@@ -179,7 +180,7 @@ def main() -> None:
     sections.append((
         "payload_score (per-occurrence payload aggregate)", p,
         [
-            ("payload decode is one Arrow mapInPandas stage", "MapInPandas" in p),
+            ("payload decode is one Arrow mapInArrow stage", "MapInArrow" in p),
             ("no per-occurrence rows (reduceat inside the kernel)", "Explode" not in p),
             ("global top-k via TakeOrderedAndProject", "TakeOrderedAndProject" in p),
         ],

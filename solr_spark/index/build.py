@@ -74,7 +74,7 @@ from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,7 +85,13 @@ from solr_spark.analysis import (
     TEXT_CHAIN,
     AnalyzerChain,
 )
-from solr_spark.index.codec import delta_varint_encode, positions_encode, varint_encode
+from solr_spark.index.codec import (
+    decode_blocks,
+    delta_varint_encode,
+    encode_blocks,
+    positions_encode,
+    varint_encode,
+)
 
 CHAINS: dict[str, AnalyzerChain] = {
     "code": CODE_CHAIN,
@@ -203,8 +209,16 @@ def _clear_stage(out_dir: str, stage: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def assign_doc_ids(df: DataFrame, sort_cols: list[str], partitions: int | None = None) -> DataFrame:
+def assign_doc_ids(
+    df: DataFrame, sort_cols: list[str], partitions: int | None = None
+) -> tuple[DataFrame, DataFrame]:
     """Deterministic global doc_id = rank over ``sort_cols`` (a unique key).
+
+    Returns ``(with_ids, persisted)``: ``persisted`` is the frame this
+    function cached to freeze the ids; the caller owns it and releases it
+    with ``persisted.unpersist()`` once ``with_ids`` is written — never
+    ``spark.catalog.clearCache()``, which would evict frames the caller's
+    caller persisted too.
 
     Scalable two-phase ranking (no single-partition global window).
     doc_id is invariant to the partition count because it equals the
@@ -257,7 +271,7 @@ def assign_doc_ids(df: DataFrame, sort_cols: list[str], partitions: int | None =
         .withColumn("doc_id", (F.col("_offset") + F.col("_mid") - F.col("_min_mid")).cast("long"))
         .drop("_pid", "_mid", "_offset", "_min_mid")
     )
-    return out
+    return out, part
 
 
 def analyze_docs(
@@ -268,14 +282,17 @@ def analyze_docs(
     sort_cols: list[str],
 ) -> DataFrame:
     """(doc_id, meta…, content_sha256, doc_len, tokens) — the analyzed
-    form of the corpus (lazy plan)."""
+    form of the corpus (lazy plan). With ``id_col=None`` the ids come
+    from :func:`assign_doc_ids`, whose persisted frame then stays cached;
+    callers that must release it assign the ids themselves and pass
+    ``id_col="doc_id"`` (as :func:`build_index` does)."""
     chain = config.chain()
     if id_col is not None:
         with_ids = corpus_df.withColumn("doc_id", F.col(id_col).cast("long"))
         if id_col != "doc_id":
             with_ids = with_ids.drop(id_col)
     else:
-        with_ids = assign_doc_ids(corpus_df, sort_cols)
+        with_ids, _ = assign_doc_ids(corpus_df, sort_cols)
     meta_cols = [c for c in with_ids.columns if c not in (text_col, "doc_id")]
     return (
         with_ids.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
@@ -290,7 +307,6 @@ def analyze_docs(
 
 
 def _stage_analyze_and_segments(
-    spark: SparkSession,
     corpus_df: DataFrame,
     out_dir: str,
     config: IndexConfig,
@@ -311,12 +327,17 @@ def _stage_analyze_and_segments(
     persisted frame inside ``assign_doc_ids`` (or come from ``id_col``),
     so both recomputes see identical ids (outputs verified
     checksum-identical against the cached formulation)."""
+    owned = None
+    if id_col is None:
+        corpus_df, owned = assign_doc_ids(corpus_df, sort_cols)
+        id_col = "doc_id"
     analyzed = analyze_docs(corpus_df, config, text_col, id_col, sort_cols)
     analyzed.drop("tokens").write.mode("overwrite").parquet(_stage_dir(out_dir, "analyzed"))
     build_postings(analyzed, config).write.mode("overwrite").parquet(
         _stage_dir(out_dir, "segments")
     )
-    spark.catalog.clearCache()  # release the doc-id assignment persist
+    if owned is not None:
+        owned.unpersist()  # only the frame this build persisted
 
 
 # ---------------------------------------------------------------------------
@@ -508,18 +529,26 @@ _BLOCK_SCHEMA = T.StructType(
 _BLOCK_COLS = [f.name for f in _BLOCK_SCHEMA.fields]
 
 
+def _flat_list(tbl, name: str, order=None) -> np.ndarray:
+    """Flat int64 values of list column ``name`` (rows taken in ``order``)."""
+    import pyarrow as pa
+
+    la = tbl.column(name).combine_chunks()
+    if order is not None:
+        la = la.take(pa.array(order))
+    return np.asarray(la.flatten()).astype(np.int64)
+
+
 def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads: bool):
     """Vectorized block encode over ONE Arrow table of (term, salt,
-    doc_id)-sorted postings: every varint stream for the whole batch is
-    produced by a single :func:`varint_encode_segmented` pass and sliced
-    per block — byte-identical to the per-block encoders (delta framing:
+    doc_id)-sorted postings: every stream of the whole batch is encoded
+    by one :func:`codec.encode_blocks` call and framed per block
+    zero-copy — byte-identical to the per-block encoders (delta framing:
     docID gaps reset absolute at block starts; position runs reset at
     doc starts, exactly ``positions_encode``). Replaces the per-block
     Python loop (tens of thousands of tiny numpy calls per batch)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from solr_spark.index.codec import varint_encode_segmented
 
     n = tbl.num_rows
     tcol = tbl.column("term").combine_chunks()
@@ -542,37 +571,12 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
     blk_ends = np.append(blk_starts[1:], n)
     nb = len(blk_starts)
 
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = doc[0]
-    deltas[1:] = doc[1:] - doc[:-1]
-    deltas[blk_starts] = doc[blk_starts]
-    ids_buf, ids_off = varint_encode_segmented(deltas, blk_starts)
-    tfs_buf, tfs_off = varint_encode_segmented(tf, blk_starts)
-    dls_buf, dls_off = varint_encode_segmented(dl, blk_starts)
-
-    def _slices(buf, off):
-        return [buf[off[i]:off[i + 1]] for i in range(nb)]
-
-    pos_col = None
-    pay_col = None
-    if with_positions or with_payloads:
-        occ_row_starts = np.cumsum(tf) - tf  # first occurrence index per row
-        blk_occ_starts = occ_row_starts[blk_starts]
-    if with_positions:
-        pos_la = tbl.column("positions").combine_chunks()
-        flatp = np.asarray(pos_la.flatten()).astype(np.int64)
-        pdeltas = np.empty(len(flatp), dtype=np.int64)
-        if len(flatp):
-            pdeltas[0] = flatp[0]
-            pdeltas[1:] = flatp[1:] - flatp[:-1]
-            pdeltas[occ_row_starts] = flatp[occ_row_starts]  # doc runs absolute
-        pos_buf, pos_off = varint_encode_segmented(pdeltas, blk_occ_starts)
-        pos_col = pa.array(_slices(pos_buf, pos_off), type=pa.binary())
-    if with_payloads:
-        pay_la = tbl.column("payloads").combine_chunks()
-        flatpl = np.asarray(pay_la.flatten()).astype(np.int64)
-        pay_buf, pay_off = varint_encode_segmented(flatpl, blk_occ_starts)
-        pay_col = pa.array(_slices(pay_buf, pay_off), type=pa.binary())
+    enc = encode_blocks(
+        blk_starts, doc, tf, dl,
+        _flat_list(tbl, "positions") if with_positions else None,
+        _flat_list(tbl, "payloads") if with_payloads else None,
+    )
+    cells = [_bin_from_offsets(*e) if e else pa.nulls(nb, pa.binary()) for e in enc]
 
     term_out = tcol.take(pa.array(blk_starts))
     if pa.types.is_dictionary(term_out.type):
@@ -586,50 +590,51 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
         pa.array(doc[blk_ends - 1]),
         pa.array(np.maximum.reduceat(tf, blk_starts).astype(np.int32)),
         pa.array(np.minimum.reduceat(dl, blk_starts).astype(np.int32)),
-        pa.array(_slices(ids_buf, ids_off), type=pa.binary()),
-        pa.array(_slices(tfs_buf, tfs_off), type=pa.binary()),
-        pa.array(_slices(dls_buf, dls_off), type=pa.binary()),
-        pos_col if pos_col is not None else pa.nulls(nb, pa.binary()),
-        pay_col if pay_col is not None else pa.nulls(nb, pa.binary()),
+        *cells,
     ]
     return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLS)
 
 
-def _encode_stream_arrow(block_size: int, with_positions: bool, with_payloads: bool = False):
-    """Streaming Arrow block encoder over sorted partition input: one
-    pass, groups spanning batch boundaries carried forward as an Arrow
-    table slice (carry bounded by the largest (term, salt) group, which
-    hot-term salting bounds by design)."""
+def _encode_grouped(batches, encode):
+    """Streaming encode over (term, salt)-sorted partition input: one
+    pass, ``encode`` applied to each prefix of whole groups; the group
+    spanning a batch boundary is carried forward as an Arrow table slice
+    (carry bounded by the largest (term, salt) group, which hot-term
+    salting bounds by design)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def enc(batches):
-        carry = None  # pa.Table
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            carry = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            tcodes = np.asarray(pc.dictionary_encode(tbl.column("term").combine_chunks()).indices)
-            s = np.asarray(tbl.column("salt"))
-            change = (tcodes[1:] != tcodes[:-1]) | (s[1:] != s[:-1])
-            starts = np.flatnonzero(change)
-            if len(starts) == 0:
-                carry = tbl  # single (possibly incomplete) group
-                continue
-            last_start = int(starts[-1]) + 1
-            carry = tbl.slice(last_start)
-            yield _encode_blocks_vec(
-                tbl.slice(0, last_start), block_size, with_positions, with_payloads
-            )
+    carry = None  # pa.Table
+    for rb in batches:
+        tbl = pa.Table.from_batches([rb])
         if carry is not None and carry.num_rows:
-            yield _encode_blocks_vec(carry, block_size, with_positions, with_payloads)
+            tbl = pa.concat_tables([carry, tbl]).combine_chunks()
+        carry = None
+        if tbl.num_rows == 0:
+            continue
+        tcodes = np.asarray(pc.dictionary_encode(tbl.column("term").combine_chunks()).indices)
+        s = np.asarray(tbl.column("salt"))
+        starts = np.flatnonzero((tcodes[1:] != tcodes[:-1]) | (s[1:] != s[:-1]))
+        if len(starts) == 0:
+            carry = tbl  # single (possibly incomplete) group
+            continue
+        last_start = int(starts[-1]) + 1
+        carry = tbl.slice(last_start)
+        yield encode(tbl.slice(0, last_start))
+    if carry is not None and carry.num_rows:
+        yield encode(carry)
+
+
+def _encode_stream_arrow(block_size: int, with_positions: bool, with_payloads: bool = False):
+    """Streaming block encoder over (term, salt, doc_id)-sorted posting
+    rows (the row-level exchange)."""
+
+    def enc(batches):
+        return _encode_grouped(
+            batches, lambda t: _encode_blocks_vec(t, block_size, with_positions, with_payloads)
+        )
 
     return enc
-
 
 
 def _encode_group_rows(pdf: pd.DataFrame, block_size: int, with_positions: bool, with_payloads: bool = False) -> pd.DataFrame:
@@ -694,37 +699,6 @@ def _encode_group_rows(pdf: pd.DataFrame, block_size: int, with_positions: bool,
     return pd.DataFrame(rows, columns=_BLOCK_COLS)
 
 
-def _encode_stream_udf(block_size: int, with_positions: bool, with_payloads: bool = False):
-    """Streaming block encoder over (term, salt, doc_id)-sorted partition
-    input: ONE Arrow pass, no window function, no collect_list — groups
-    that span Arrow-batch boundaries are carried forward (carry size is
-    bounded by the largest (term, salt) group, which hot-term salting
-    bounds by design)."""
-
-    def enc(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            t = pdf["term"].to_numpy()
-            s = pdf["salt"].to_numpy()
-            change = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-            starts = np.flatnonzero(change)
-            if len(starts) == 0:
-                carry = pdf  # single (possibly incomplete) group
-                continue
-            last_start = int(starts[-1]) + 1
-            carry = pdf.iloc[last_start:]
-            yield _encode_group_rows(pdf.iloc[:last_start], block_size, with_positions, with_payloads)
-        if carry is not None and len(carry):
-            yield _encode_group_rows(carry, block_size, with_positions, with_payloads)
-
-    return enc
-
-
 # ---------------------------------------------------------------------------
 # run-packed blocks exchange
 # ---------------------------------------------------------------------------
@@ -763,25 +737,6 @@ def _run_schema(with_positions: bool, with_payloads: bool) -> str:
     return s
 
 
-def _binary_cells_concat(col) -> np.ndarray:
-    """Concatenated bytes of an Arrow binary column, in row order —
-    zero-copy: for a single-chunk binary array the data buffer IS the
-    row-order concatenation; slices are handled via the offsets buffer."""
-    import pyarrow as pa
-
-    arr = col.combine_chunks() if hasattr(col, "num_chunks") else col
-    if isinstance(arr, pa.ChunkedArray):
-        if arr.num_chunks == 0:
-            return np.empty(0, dtype=np.uint8)
-        arr = arr.chunk(0)
-    if len(arr) == 0:
-        return np.empty(0, dtype=np.uint8)
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
-
-
 def _bin_from_offsets(buf: bytes, off: np.ndarray):
     """Zero-copy Arrow binary array framing ``buf`` at byte offsets
     ``off`` (len(off) = rows + 1) — replaces a Python loop of per-run
@@ -798,17 +753,15 @@ def _bin_from_offsets(buf: bytes, off: np.ndarray):
 def _pack_runs_arrow(with_positions: bool, with_payloads: bool):
     """Map-side packer: accumulate posting rows to ``_PACK_ROWS``-sized
     regions, then emit one row per (term, salt) run with the run's
-    posting streams ALREADY delta+varint-packed (docID gaps reset
-    absolute at run start; position runs reset at doc starts — the exact
-    framing the blocks codec uses, so the reducer decodes with the same
-    :mod:`codec` kernels). The exchange therefore ships ~1-2 bytes per
-    posting value instead of 8-byte ints in per-posting rows.
+    posting streams ALREADY delta+varint-packed by the block codec
+    (:func:`codec.encode_blocks` with runs as the blocks, so the reducer
+    decodes them with :func:`codec.decode_blocks`). The exchange
+    therefore ships ~1-2 bytes per posting value instead of 8-byte ints
+    in per-posting rows.
     The stable lexsort keeps each run's postings in input order, which is
     doc-ascending within a region (segments rows are emitted doc-major)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from solr_spark.index.codec import varint_encode_segmented
 
     def _pack(tbl):
         n = tbl.num_rows
@@ -833,14 +786,11 @@ def _pack_runs_arrow(with_positions: bool, with_payloads: bool):
         dl = np.asarray(tbl.column("doc_len")).astype(np.int64)[order]
         tb = np.asarray(tbl.column("term_bucket")).astype(np.int32)[order]
 
-        deltas = np.empty(n, dtype=np.int64)
-        deltas[0] = doc[0]
-        deltas[1:] = doc[1:] - doc[:-1]
-        deltas[starts] = doc[starts]  # run starts absolute
-        doc_buf, doc_off = varint_encode_segmented(deltas, starts)
-        tf_buf, tf_off = varint_encode_segmented(tf, starts)
-        dl_buf, dl_off = varint_encode_segmented(dl, starts)
-
+        enc = encode_blocks(
+            starts, doc, tf, dl,
+            _flat_list(tbl, "positions", order) if with_positions else None,
+            _flat_list(tbl, "payloads", order) if with_payloads else None,
+        )
         arrays = [
             dv.dictionary.take(pa.array(c_o[starts])),
             pa.array(s_o[starts].astype(np.int32)),
@@ -851,33 +801,12 @@ def _pack_runs_arrow(with_positions: bool, with_payloads: bool):
             pa.array(np.minimum.reduceat(doc, starts)),
             pa.array(np.maximum.reduceat(doc, starts)),
             pa.array((ends - starts).astype(np.int32)),
-            _bin_from_offsets(doc_buf, doc_off),
-            _bin_from_offsets(tf_buf, tf_off),
-            _bin_from_offsets(dl_buf, dl_off),
+            *(_bin_from_offsets(*e) for e in enc if e),
         ]
         names = ["term", "salt", "term_bucket", "min_doc", "max_doc",
                  "n", "doc_enc", "tf_enc", "dl_enc"]
-        if with_positions or with_payloads:
-            occ_row_starts = (np.cumsum(tf) - tf).astype(np.int64)
-            run_occ_starts = occ_row_starts[starts]
-            oidx = pa.array(order)
-        if with_positions:
-            pos_o = tbl.column("positions").combine_chunks().take(oidx)
-            flatp = np.asarray(pos_o.flatten()).astype(np.int64)
-            pdeltas = np.empty(len(flatp), dtype=np.int64)
-            if len(flatp):
-                pdeltas[0] = flatp[0]
-                pdeltas[1:] = flatp[1:] - flatp[:-1]
-                pdeltas[occ_row_starts] = flatp[occ_row_starts]  # doc runs absolute
-            pos_buf, pos_off = varint_encode_segmented(pdeltas, run_occ_starts)
-            arrays.append(_bin_from_offsets(pos_buf, pos_off))
-            names.append("pos_enc")
-        if with_payloads:
-            pay_o = tbl.column("payloads").combine_chunks().take(oidx)
-            flatpl = np.asarray(pay_o.flatten()).astype(np.int64)
-            pay_buf, pay_off = varint_encode_segmented(flatpl, run_occ_starts)
-            arrays.append(_bin_from_offsets(pay_buf, pay_off))
-            names.append("pay_enc")
+        names += ["pos_enc"] if with_positions else []
+        names += ["pay_enc"] if with_payloads else []
         return pa.RecordBatch.from_arrays(arrays, names=names)
 
     def gen(batches):
@@ -901,29 +830,25 @@ def _runs_to_postings_tbl(tbl, with_positions: bool, with_payloads: bool):
     the per-posting table the block encoder consumes. All runs of a
     reducer region decode in ONE pass per stream: the binary cells of a
     combined Arrow column are contiguous in row order, and the codec's
-    segmented-delta decode (:func:`codec.positions_decode`) restores
-    absolute values with per-run resets. Runs of one group cover disjoint
-    doc ranges, so concatenation IS the merge; the invariant is verified
-    and repaired with a full sort if ever violated (never expected —
-    kept so correctness is unconditional, not an artifact of the
-    partitioning)."""
+    block decoder (:func:`codec.decode_blocks`, a run framed like a
+    block) restores absolute values with per-run resets. Runs of one
+    group cover disjoint doc ranges, so concatenation IS the merge; the
+    invariant is verified and repaired with a full sort if ever violated
+    (never expected — kept so correctness is unconditional, not an
+    artifact of the partitioning)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from solr_spark.index.codec import positions_decode, varint_decode
 
     tcol = tbl.column("term").combine_chunks()
     dv = pc.dictionary_encode(tcol)
     codes = np.asarray(dv.indices).astype(np.int64)
     salt = np.asarray(tbl.column("salt")).astype(np.int64)
     lens = np.asarray(tbl.column("n")).astype(np.int64)
-    doc_cat = _binary_cells_concat(tbl.column("doc_enc"))
-    tf_cat = _binary_cells_concat(tbl.column("tf_enc"))
-    dl_cat = _binary_cells_concat(tbl.column("dl_enc"))
-    # segmented delta decode: frames = run lengths, firsts absolute
-    doc = positions_decode(doc_cat, lens).astype(np.int64)
-    tf = varint_decode(tf_cat).astype(np.int64)
-    dl = varint_decode(dl_cat).astype(np.int64)
+    doc, tf, dl, pos, pay = decode_blocks(
+        lens, tbl.column("doc_enc"), tbl.column("tf_enc"), tbl.column("dl_enc"),
+        tbl.column("pos_enc") if with_positions else None,
+        tbl.column("pay_enc") if with_payloads else None,
+    )
     n = len(doc)
     pcodes = np.repeat(codes, lens)
     psalt = np.repeat(salt, lens)
@@ -937,13 +862,9 @@ def _runs_to_postings_tbl(tbl, with_positions: bool, with_payloads: bool):
     if with_positions or with_payloads:
         occ_offs = pa.array(np.concatenate([[0], np.cumsum(tf)]).astype(np.int32))
     if with_positions:
-        pos_cat = _binary_cells_concat(tbl.column("pos_enc"))
-        pos_flat = positions_decode(pos_cat, tf).astype(np.int32)
-        cols["positions"] = pa.ListArray.from_arrays(occ_offs, pa.array(pos_flat))
+        cols["positions"] = pa.ListArray.from_arrays(occ_offs, pa.array(pos.astype(np.int32)))
     if with_payloads:
-        pay_cat = _binary_cells_concat(tbl.column("pay_enc"))
-        pay_flat = varint_decode(pay_cat).astype(np.int32)
-        cols["payloads"] = pa.ListArray.from_arrays(occ_offs, pa.array(pay_flat))
+        cols["payloads"] = pa.ListArray.from_arrays(occ_offs, pa.array(pay.astype(np.int32)))
     if n > 1:
         same = (pcodes[1:] == pcodes[:-1]) & (psalt[1:] == psalt[:-1])
         if not np.all(doc[1:][same] > doc[:-1][same]):
@@ -955,44 +876,68 @@ def _runs_to_postings_tbl(tbl, with_positions: bool, with_payloads: bool):
 
 def _encode_stream_runs(block_size: int, with_positions: bool, with_payloads: bool = False):
     """Streaming block encoder over (term, salt, min_doc)-sorted RUN
-    input: same carry discipline as :func:`_encode_stream_arrow`, but the
-    carry holds runs (one row per mapper region per group — bounded by
-    salting), and each complete region is flattened then encoded by the
-    shared vectorized encoder, so block bytes are identical to the
-    row-level path (tested)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    input: the carry holds runs (one row per mapper region per group —
+    bounded by salting), and each complete region is flattened then
+    encoded by the shared vectorized encoder, so block bytes are
+    identical to the row-level path (tested)."""
 
     def enc(batches):
-        carry = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            carry = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            tcodes = np.asarray(pc.dictionary_encode(tbl.column("term").combine_chunks()).indices)
-            s = np.asarray(tbl.column("salt"))
-            change = (tcodes[1:] != tcodes[:-1]) | (s[1:] != s[:-1])
-            starts = np.flatnonzero(change)
-            if len(starts) == 0:
-                carry = tbl  # single (possibly incomplete) group
-                continue
-            last_start = int(starts[-1]) + 1
-            carry = tbl.slice(last_start)
-            yield _encode_blocks_vec(
-                _runs_to_postings_tbl(tbl.slice(0, last_start), with_positions, with_payloads),
+        return _encode_grouped(
+            batches,
+            lambda t: _encode_blocks_vec(
+                _runs_to_postings_tbl(t, with_positions, with_payloads),
                 block_size, with_positions, with_payloads,
-            )
-        if carry is not None and carry.num_rows:
-            yield _encode_blocks_vec(
-                _runs_to_postings_tbl(carry, with_positions, with_payloads),
-                block_size, with_positions, with_payloads,
-            )
+            ),
+        )
 
     return enc
+
+
+def _term_bucket(config: IndexConfig) -> Column:
+    """term → ``term_bucket`` directory partition of blocks/:
+    ``pmod(xxhash64(term), B)`` (mirrored on the driver by
+    ``SearchEngine._term_buckets``)."""
+    return F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
+
+
+def _salted_postings(
+    segments: DataFrame,
+    term_dict: DataFrame,
+    config: IndexConfig,
+    only_buckets: list[int] | None,
+) -> DataFrame:
+    """Postings with their ``salt`` and ``term_bucket``, restricted to
+    ``only_buckets`` — the one derivation both block exchanges consume."""
+    # Salt assignment needs only HOTNESS, not the full dictionary.
+    # Joining segments (O(total postings)) against the whole term_dict
+    # (O(vocabulary) — billions of distinct identifiers in code at 10^12
+    # files) would be a sort-merge join: a second full shuffle of the
+    # posting stream. The hot set is tiny BY CONSTRUCTION — at most
+    # total_postings / hot_df_threshold terms, in practice the Zipf head
+    # ('import', 'def', 'return') — so broadcast it and left-join: the
+    # posting stream is touched map-side only, and the one real shuffle
+    # stays the (term_bucket, salt) block exchange.
+    hot = F.broadcast(
+        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
+    )
+    p = segments.join(hot, "term", "left")
+    p = p.withColumn(
+        "salt",
+        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
+    ).drop("_hot")
+    p = p.withColumn("term_bucket", _term_bucket(config))
+    if only_buckets is not None:
+        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
+    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
+    if config.with_positions:
+        cols.append("positions")
+    if config.with_payloads:
+        cols.append("payloads")
+    return p.select(*cols)
+
+
+def _n_block_parts(config: IndexConfig, only_buckets: list[int] | None) -> int:
+    return config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
 
 
 def _blocks_shuffle_input(
@@ -1004,44 +949,16 @@ def _blocks_shuffle_input(
     """The salted, bucketed, sorted shuffle input the block encoder
     consumes — factored out so tests can assert the skew property
     (a hot term's postings span >1 shuffle partition) on the real path."""
-    # Salt assignment needs only HOTNESS, not the full dictionary.
-    # Joining segments (O(total postings)) against the whole term_dict
-    # (O(vocabulary) — billions of distinct identifiers in code at 10^12
-    # files) would be a sort-merge join: a second full shuffle of the
-    # posting stream. The hot set is tiny BY CONSTRUCTION — at most
-    # total_postings / hot_df_threshold terms, in practice the Zipf head
-    # ('import', 'def', 'return') — so broadcast it and left-join: the
-    # posting stream is touched map-side only, and the one real shuffle
-    # stays the (term_bucket, salt) block exchange below.
-    hot = F.broadcast(
-        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
-    )
-    p = segments.join(hot, "term", "left")
-    p = p.withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
-    ).drop("_hot")
-    p = p.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-    )
-    if only_buckets is not None:
-        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
-    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
-    if config.with_positions:
-        cols.append("positions")
-    if config.with_payloads:
-        cols.append("payloads")
-    n_parts = config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
     # Pack postings into per-(term, salt) RUNS before the exchange: the
     # shuffle ships O(runs) array rows instead of O(postings) scalar rows
     # and the reducer sorts runs by (term, salt, min_doc) — concatenation
     # of disjoint doc ranges replaces the posting-level sort entirely.
-    runs = p.select(*cols).mapInArrow(
+    runs = _salted_postings(segments, term_dict, config, only_buckets).mapInArrow(
         _pack_runs_arrow(config.with_positions, config.with_payloads),
         schema=_run_schema(config.with_positions, config.with_payloads),
     )
     return (
-        runs.repartition(n_parts, "term_bucket", "salt")
+        runs.repartition(_n_block_parts(config, only_buckets), "term_bucket", "salt")
         .sortWithinPartitions("term", "salt", "min_doc")
     )
 
@@ -1055,28 +972,9 @@ def _blocks_shuffle_input_rows(
     """ROW-LEVEL exchange (one shuffled row per posting) — the pre-pack
     formulation, kept as the equivalence oracle for the run-packed path:
     both must encode byte-identical blocks (tested)."""
-    hot = F.broadcast(
-        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
-    )
-    p = segments.join(hot, "term", "left")
-    p = p.withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
-    ).drop("_hot")
-    p = p.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-    )
-    if only_buckets is not None:
-        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
-    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
-    if config.with_positions:
-        cols.append("positions")
-    if config.with_payloads:
-        cols.append("payloads")
-    n_parts = config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
     return (
-        p.select(*cols)
-        .repartition(n_parts, "term_bucket", "salt")
+        _salted_postings(segments, term_dict, config, only_buckets)
+        .repartition(_n_block_parts(config, only_buckets), "term_bucket", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
     )
 
@@ -1119,9 +1017,7 @@ def _stage_blocks(
             _encode_stream_runs(config.block_size, config.with_positions, config.with_payloads),
             schema=_BLOCK_SCHEMA,
         )
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-        )
+        .withColumn("term_bucket", _term_bucket(config))
     )
     bdir = _stage_dir(out_dir, "blocks")
     if only_buckets is None:
@@ -1265,9 +1161,7 @@ def build_index(
         _clear_stage(out_dir, "analyzed")
         _clear_stage(out_dir, "segments")
         t0 = time.time()
-        _stage_analyze_and_segments(
-            spark, corpus_df, out_dir, config, text_col, id_col, sort_cols
-        )
+        _stage_analyze_and_segments(corpus_df, out_dir, config, text_col, id_col, sort_cols)
         _write_manifest(out_dir, "analyzed", config, t0)
         _write_manifest(out_dir, "segments", config, t0)
 

@@ -13,9 +13,17 @@ block regardless of block length. No per-row Python (input-hint mandate).
 
 Parquet then layers dictionary/zstd on top of the varint bytes, mirroring
 how Lucene's codec output still benefits from filesystem compression.
+
+:func:`decode_blocks` is the ONE reader of the block format: every query
+decoder (BM25 scoring, phrase/proximity, payload) and the build reducer's
+run flatten call it on a whole Arrow batch of block rows.
+:func:`encode_blocks` is its inverse, shared by the block encoder and the
+map-side run packer.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -168,3 +176,91 @@ def varint_encode_segmented(
     seg_offs[:-1] = offsets[seg_starts]
     seg_offs[-1] = int(ends[-1])
     return out.tobytes(), seg_offs
+
+
+def _binary_cells_concat(col) -> np.ndarray:
+    """Concatenated bytes of an Arrow binary column, in row order —
+    zero-copy: for a single-chunk binary array the data buffer IS the
+    row-order concatenation; slices are handled via the offsets buffer."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks() if hasattr(col, "num_chunks") else col
+    if isinstance(arr, pa.ChunkedArray):
+        if arr.num_chunks == 0:
+            return np.empty(0, dtype=np.uint8)
+        arr = arr.chunk(0)
+    if len(arr) == 0:
+        return np.empty(0, dtype=np.uint8)
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0] : offs[-1]]
+
+
+class Postings(NamedTuple):
+    """Decoded posting streams of a batch of blocks, in row order.
+    ``pos`` / ``payload`` are flat per-occurrence arrays (doc runs framed
+    by ``tf``), None unless their stream was asked for."""
+
+    doc_id: np.ndarray
+    tf: np.ndarray
+    dl: np.ndarray
+    pos: np.ndarray | None = None
+    payload: np.ndarray | None = None
+
+
+def decode_blocks(n_docs, doc_ids_enc, tfs_enc, dls_enc, pos_enc=None, payloads_enc=None) -> Postings:
+    """Decode a whole batch of block rows in one pass per stream.
+
+    Arguments are Arrow columns of the batch: ``n_docs`` frames the
+    blocks, the ``*_enc`` cells are the block's varint streams. LEB128 is
+    self-framing, so each stream's cells concatenate zero-copy and decode
+    at once; docIDs restart absolute at every block, which is exactly the
+    per-run reset of :func:`positions_decode` with ``n_docs`` as the run
+    lengths. Position and payload runs are framed by the decoded tf
+    array. All outputs are int64. The build reducer's posting runs use
+    the same framing (run length, doc/tf/dl/pos/payload streams) and
+    decode here too."""
+    n = np.asarray(n_docs, dtype=np.int64)
+    tf = varint_decode(_binary_cells_concat(tfs_enc)).astype(np.int64)
+    out = Postings(
+        positions_decode(_binary_cells_concat(doc_ids_enc), n).astype(np.int64),
+        tf,
+        varint_decode(_binary_cells_concat(dls_enc)).astype(np.int64),
+    )
+    if pos_enc is not None:
+        out = out._replace(
+            pos=positions_decode(_binary_cells_concat(pos_enc), tf).astype(np.int64)
+        )
+    if payloads_enc is not None:
+        if payloads_enc.null_count:
+            raise ValueError("index built without payloads; rebuild with with_payloads=True")
+        out = out._replace(
+            payload=varint_decode(_binary_cells_concat(payloads_enc)).astype(np.int64)
+        )
+    return out
+
+
+def encode_blocks(
+    starts, doc_id, tf, dl, pos=None, payload=None
+) -> list[tuple[bytes, np.ndarray] | None]:
+    """Inverse of :func:`decode_blocks`: encode posting rows framed into
+    blocks (or runs) that begin at row indexes ``starts``, ONE
+    :func:`varint_encode_segmented` pass per stream. DocIDs are gaps that
+    restart absolute at every block; position runs restart absolute at
+    every doc. Returns ``(buffer, byte_offsets)`` per stream, in the
+    order doc_id, tf, dl, pos, payload (None for a stream not given):
+    block i's cell is ``buffer[byte_offsets[i]:byte_offsets[i + 1]]``."""
+    starts = np.asarray(starts, dtype=np.int64)
+    tf = np.asarray(tf, dtype=np.int64)
+    gaps = np.diff(doc_id, prepend=0)
+    gaps[starts] = doc_id[starts]
+    out = [varint_encode_segmented(v, starts) for v in (gaps, tf, dl)]
+    occ_row_starts = np.cumsum(tf) - tf  # first occurrence of each row
+    pgaps = None
+    if pos is not None:
+        pgaps = np.diff(pos, prepend=0)
+        pgaps[occ_row_starts] = pos[occ_row_starts]
+    for v in (pgaps, payload):
+        out.append(None if v is None else varint_encode_segmented(v, occ_row_starts[starts]))
+    return out

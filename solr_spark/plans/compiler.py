@@ -38,7 +38,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, _DECODED_SCHEMA, _decode_blocks_udf
+from solr_spark.query.engine import SearchEngine, decode_postings
 from solr_spark.query.extras import _expansion_stats
 from solr_spark.query.parser import (
     BoolQ,
@@ -387,9 +387,7 @@ def execute_ast(
     if ctx.term_rows:
         terms = sorted({t for t, _, _ in ctx.term_rows})
         blocks = engine._blocks_for(terms)
-        decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-            _decode_blocks_udf(), schema=_DECODED_SCHEMA
-        )
+        decoded = decode_postings(blocks)
         wmap = engine.spark.createDataFrame(
             ctx.term_rows, "term string, leaf_id int, wfactor double"
         )

@@ -5,8 +5,10 @@ The Spark restatement of the reference's two-phase distributed search
 
 - phase 1 (GET_TOP_IDS analog): prune the block scan to the query terms'
   buckets (directory partition pruning + Parquet row-group pruning),
-  decode blocks with an Arrow UDF (numpy varint kernels), aggregate
-  per-doc scores, take the global top-k via ``orderBy(...).limit(k)``
+  decode blocks in one ``mapInArrow`` stage (:func:`decode_postings`
+  over the codec's single block kernel ``codec.decode_blocks``, which
+  every reader of the block format shares), aggregate per-doc scores,
+  take the global top-k via ``orderBy(...).limit(k)``
   (Spark's TakeOrderedAndProject = per-partition PQ then driver merge —
   exactly Solr's ``mergeIds`` shard priority queue,
   ``QueryComponent.java:971``).
@@ -54,14 +56,13 @@ from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solr_spark.functions.hashing import xxhash64_py
 from solr_spark.index.build import InvertedIndex
-from solr_spark.index.codec import delta_varint_decode, varint_decode
+from solr_spark.index.codec import decode_blocks
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -73,44 +74,57 @@ _DECODED_SCHEMA = T.StructType(
 )
 
 
-def _decode_blocks_udf():
-    """Arrow-batched block decoder: binary columns → exploded postings.
+def map_blocks(
+    blocks: DataFrame, fn, schema, positions: bool = False, payloads: bool = False
+) -> DataFrame:
+    """The decode stage of every query plan: ONE ``mapInArrow`` over block
+    rows. Each Arrow batch decodes through the codec's block kernel
+    (:func:`codec.decode_blocks`, with the position / payload stream when
+    asked) and ``fn(batch, postings)`` maps it to the output columns
+    (name → array) — no per-posting Python objects."""
+    import pyarrow as pa
 
-    Vectorized across the WHOLE batch, not per block: the three varint
-    streams are concatenated and decoded in one pass each (LEB128 is
-    self-framing, so buffer concatenation composes), and the delta-coded
-    docIDs are rebuilt with a segmented cumsum that resets at block
-    starts (the ``n_docs`` column frames the segments — the same trick
-    as ``positions_decode``). A hot term at corpus scale decodes
-    hundreds of thousands of blocks per partition; per-block Python is
-    the wrong shape for that."""
+    cols = ["term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc"]
+    cols += ["pos_enc"] if positions else []
+    cols += ["payloads_enc"] if payloads else []
 
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+    def gen(batches):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            n = pdf["n_docs"].to_numpy().astype(np.int64)
-            total_docs = int(n.sum())
-            if total_docs == 0:
-                continue
-            deltas = varint_decode(b"".join(pdf["doc_ids_enc"]))
-            starts = np.cumsum(n) - n
-            run = np.cumsum(deltas.astype(np.int64))
-            base = np.zeros(total_docs, dtype=np.int64)
-            nz = starts[starts > 0]
-            base[nz] = run[nz - 1]
-            np.maximum.accumulate(base, out=base)
-            doc_ids = run - base
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), n),
-                    "doc_id": doc_ids,
-                    "tf": varint_decode(b"".join(pdf["tfs_enc"])).astype(np.int32),
-                    "dl": varint_decode(b"".join(pdf["dls_enc"])).astype(np.int32),
-                }
+            col = rb.column
+            p = decode_blocks(
+                col("n_docs"), col("doc_ids_enc"), col("tfs_enc"), col("dls_enc"),
+                col("pos_enc") if positions else None,
+                col("payloads_enc") if payloads else None,
             )
+            out = fn(rb, p)
+            yield pa.RecordBatch.from_arrays([pa.array(c) for c in out.values()], names=list(out))
 
-    return dec
+    return blocks.select(*cols).mapInArrow(gen, schema=schema)
+
+
+def per_block_terms(rb, counts):
+    """The batch's term column, row i repeated ``counts[i]`` times."""
+    import pyarrow as pa
+
+    return rb.column("term").take(pa.array(np.repeat(np.arange(rb.num_rows), counts)))
+
+
+def decode_postings(blocks: DataFrame) -> DataFrame:
+    """(term, doc_id, tf, dl) postings of ``blocks`` — the decode stage
+    of every BM25 plan (scoring, θ seed, explain, maxscore, compiled
+    lucene queries)."""
+    return map_blocks(
+        blocks,
+        lambda rb, p: {
+            "term": per_block_terms(rb, np.asarray(rb.column("n_docs"))),
+            "doc_id": p.doc_id,
+            "tf": p.tf.astype(np.int32),
+            "dl": p.dl.astype(np.int32),
+        },
+        _DECODED_SCHEMA,
+    )
 
 
 @dataclass
@@ -339,10 +353,7 @@ class SearchEngine:
             )
         if blocks is None:
             blocks = self._blocks_for([s.term for s in stats])
-        decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-            _decode_blocks_udf(), schema=_DECODED_SCHEMA
-        )
-        scored = self._score_decoded(decoded, stats)
+        scored = self._score_decoded(decode_postings(blocks), stats)
         if len(stats) == 1:
             # Single distinct term: a doc_id appears at most ONCE across
             # the term's posting streams (tf is per-doc aggregated at
@@ -426,10 +437,6 @@ class SearchEngine:
     # impact under the CURRENT global stats — blocks never go stale when
     # N/avgdl/idf drift between commits.
     # ------------------------------------------------------------------
-    def _bound_py(self, idf: float, max_tf: int, min_dl: int) -> float:
-        tf, dl = float(max_tf), float(min_dl)
-        return idf * tf / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-
     def _g_col(self) -> "F.Column":
         """Stats-independent block impact factor g = tf_sat(max_tf, min_dl):
         the block bound is idf·g, monotone ↑ in max_tf and ↓ in min_dl."""
@@ -495,11 +502,7 @@ class SearchEngine:
             .limit(self._N_SEED_BLOCKS)
             .select("term", "salt", "block_no")
         )
-        decoded = (
-            blocks.join(F.broadcast(seed), ["term", "salt", "block_no"])
-            .select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc")
-            .mapInPandas(_decode_blocks_udf(), schema=_DECODED_SCHEMA)
-        )
+        decoded = decode_postings(blocks.join(F.broadcast(seed), ["term", "salt", "block_no"]))
         partial = (
             self._score_decoded(decoded, stats)
             .groupBy("doc_id")

@@ -143,16 +143,13 @@ def maxscore_topk(engine: SearchEngine, query: str, k: int = 10) -> DataFrame:
     disjunction scored by the MAX per-term BM25 contribution instead of
     the sum (DisjunctionMaxQuery with tiebreak 0). Same pruned decode as
     the OR path; only the aggregate changes."""
-    from solr_spark.query.engine import _DECODED_SCHEMA, _decode_blocks_udf
+    from solr_spark.query.engine import decode_postings
 
     stats = engine._term_stats(engine.analyze_query(query))
     if not stats:
         return engine.spark.createDataFrame([], "doc_id long, score float")
     blocks = engine._blocks_for([s.term for s in stats])
-    decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-        _decode_blocks_udf(), schema=_DECODED_SCHEMA
-    )
-    scored = engine._score_decoded(decoded, stats)
+    scored = engine._score_decoded(decode_postings(blocks), stats)
     return (
         scored.groupBy("doc_id")
         .agg(F.max("contrib").alias("score_raw"))
@@ -1356,7 +1353,7 @@ def explain_scores(
     semi-join to the top-k ids — no second scoring pass and no driver
     work beyond the O(#terms) stats lookup.
     """
-    from solr_spark.query.engine import _DECODED_SCHEMA, _decode_blocks_udf
+    from solr_spark.query.engine import decode_postings
 
     terms = engine.analyze_query(query)
     stats = engine._term_stats(terms)
@@ -1366,10 +1363,7 @@ def explain_scores(
         )
     hits = engine.topk(query, k=k, mode=mode).select("doc_id")
     blocks = engine._blocks_for([s.term for s in stats])
-    decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-        _decode_blocks_udf(), schema=_DECODED_SCHEMA
-    )
-    scored = engine._score_decoded(decoded, stats)
+    scored = engine._score_decoded(decode_postings(blocks), stats)
     df_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.df))])
     idf_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.idf))])
     return (

@@ -10,23 +10,23 @@ payload source — see IndexConfig.with_payloads), and the query scores
 each matching doc with an aggregate (sum / max / min / avg) of the
 payloads at that term's positions.
 
-Execution: pruned block scan → one Arrow decode pass that REDUCES the
-payload runs per doc inside numpy (``np.add.reduceat`` over the tf-run
-framing — no per-occurrence rows ever materialize in the plan) → one
-hash aggregation → TakeOrderedAndProject. Payload bytes of other terms
-are never read (column pruning + the term filter).
+Execution: pruned block scan → one ``mapInArrow`` decode pass through
+the codec's single block kernel (``codec.decode_blocks``, shared by every
+reader of the block format) that REDUCES the payload runs per doc inside
+numpy (``np.add.reduceat`` over the tf-run framing — no per-occurrence
+rows ever materialize in the plan) → one hash aggregation →
+TakeOrderedAndProject. Payload bytes of other terms are never read
+(column pruning + the term filter).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from solr_spark.index.codec import varint_decode
-from solr_spark.query.engine import SearchEngine
+from solr_spark.query.engine import SearchEngine, map_blocks
 
 _PAYSCORE_SCHEMA = T.StructType(
     [
@@ -38,48 +38,12 @@ _PAYSCORE_SCHEMA = T.StructType(
     ]
 )
 
-
-def _decode_batch(pdf):
-    """Batch-wide decode shared by the payload UDFs: concatenated LEB128
-    buffers decode in one pass each; docIDs rebuild with a segmented
-    cumsum reset at block starts (framed by n_docs) — no per-block
-    Python (same shape as the engine's block decoder)."""
-    if pdf["payloads_enc"].isna().any():
-        raise ValueError(
-            "index built without payloads; rebuild with with_payloads=True"
-        )
-    n = pdf["n_docs"].to_numpy().astype(np.int64)
-    deltas = varint_decode(b"".join(pdf["doc_ids_enc"]))
-    starts = np.cumsum(n) - n
-    run = np.cumsum(deltas.astype(np.int64))
-    base = np.zeros(int(n.sum()), dtype=np.int64)
-    nz = starts[starts > 0]
-    base[nz] = run[nz - 1]
-    np.maximum.accumulate(base, out=base)
-    d = run - base
-    tf = varint_decode(b"".join(pdf["tfs_enc"])).astype(np.int64)
-    pay = varint_decode(b"".join(pdf["payloads_enc"])).astype(np.int64)
-    return d, tf, pay
-
-
-def _decode_payload_udf():
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            d, tf, pay = _decode_batch(pdf)
-            occ_starts = np.cumsum(tf) - tf
-            yield pd.DataFrame(
-                {
-                    "doc_id": d,
-                    "p_sum": np.add.reduceat(pay, occ_starts),
-                    "p_min": np.minimum.reduceat(pay, occ_starts),
-                    "p_max": np.maximum.reduceat(pay, occ_starts),
-                    "p_cnt": tf,
-                }
-            )
-
-    return dec
+_PAYCHECK_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("n_hits", T.LongType(), False),
+    ]
+)
 
 
 def payload_score(
@@ -96,9 +60,18 @@ def payload_score(
     if len(toks) != 1:
         raise ValueError("payload_score takes a single term")
     blocks = engine._blocks_for(toks)
-    per_block = blocks.select("n_docs", "doc_ids_enc", "tfs_enc", "payloads_enc").mapInPandas(
-        _decode_payload_udf(), schema=_PAYSCORE_SCHEMA
-    )
+
+    def per_doc(rb, p):
+        occ = np.cumsum(p.tf) - p.tf
+        return {
+            "doc_id": p.doc_id,
+            "p_sum": np.add.reduceat(p.payload, occ),
+            "p_min": np.minimum.reduceat(p.payload, occ),
+            "p_max": np.maximum.reduceat(p.payload, occ),
+            "p_cnt": p.tf,
+        }
+
+    per_block = map_blocks(blocks, per_doc, _PAYSCORE_SCHEMA, payloads=True)
     # a doc occurs in exactly one block per term, but salted/incremental
     # layouts may split it — merge associatively then derive the score
     agg = per_block.groupBy("doc_id").agg(
@@ -132,22 +105,11 @@ def payload_check(
 
     target = int(payload)
 
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            d, tf, pay = _decode_batch(pdf)
-            occ_starts = np.cumsum(tf) - tf
-            hit = (pay == target).astype(np.int64)
-            yield pd.DataFrame({"doc_id": d, "n_hits": np.add.reduceat(hit, occ_starts)})
+    def per_doc(rb, p):
+        hit = (p.payload == target).astype(np.int64)
+        return {"doc_id": p.doc_id, "n_hits": np.add.reduceat(hit, np.cumsum(p.tf) - p.tf)}
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("n_hits", T.LongType(), False),
-        ]
-    )
-    per_block = blocks.select("n_docs", "doc_ids_enc", "tfs_enc", "payloads_enc").mapInPandas(dec, schema=schema)
+    per_block = map_blocks(blocks, per_doc, _PAYCHECK_SCHEMA, payloads=True)
     return (
         per_block.groupBy("doc_id")
         .agg(F.sum("n_hits").alias("n_hits"))

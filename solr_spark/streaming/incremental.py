@@ -54,7 +54,9 @@ from solr_spark.index.build import (
     _stage_dir,
     _stage_term_dict,
     _stage_blocks,
+    _term_bucket,
     _write_manifest,
+    analyze_docs,
     assign_doc_ids,
     build_postings,
 )
@@ -120,23 +122,13 @@ class IncrementalIndexer:
         if batch_id is None:
             ids = self._batch_ids()
             batch_id = (ids[-1] + 1) if ids else 0
-        chain = self.config.chain()
-        if id_col is not None:
-            with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-            if id_col != "doc_id":
-                with_ids = with_ids.drop(id_col)
-        else:
-            with_ids = assign_doc_ids(docs, sort_cols or ["repo", "path", "commit"])
-            with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(self._next_doc_id))
-        meta_cols = [c for c in with_ids.columns if c not in (text_col, "doc_id")]
-        analyzed = (
-            with_ids.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-            .withColumn("tokens", chain.tokens(text_col))
-            .withColumn("doc_len", F.size("tokens").cast("int"))
-            .withColumn("stored_text", F.col(text_col))
-            .select("doc_id", *meta_cols, "content_sha256", "doc_len", "stored_text", "tokens")
-        )
-        analyzed = analyzed.persist()  # one materialization feeds both writes
+        owned = None
+        if id_col is None:
+            docs, owned = assign_doc_ids(docs, sort_cols or ["repo", "path", "commit"])
+            docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(self._next_doc_id))
+        analyzed = analyze_docs(
+            docs, self.config, text_col, id_col or "doc_id", sort_cols or []
+        ).persist()  # one materialization feeds both writes
         n = analyzed.count()
         sub = f"batch={int(batch_id)}"
         # overwrite per-batch directories: re-delivery replaces, never dupes
@@ -147,6 +139,8 @@ class IncrementalIndexer:
             os.path.join(_stage_dir(self.dir, "segments"), sub)
         )
         analyzed.unpersist()
+        if owned is not None:
+            owned.unpersist()
         if id_col is None:
             self._next_doc_id += int(n)
         else:  # explicit ids may exceed the counter — refresh from disk
@@ -173,9 +167,6 @@ class IncrementalIndexer:
         if not os.path.isdir(tdir) or not os.listdir(tdir):
             return None
         return self.spark.read.parquet(tdir).select("doc_id").distinct()
-
-    def _bucket_expr(self) -> Column:
-        return F.pmod(F.xxhash64("term"), F.lit(self.config.n_term_buckets)).cast("int")
 
     def _compact_stage(self, stage: str, tomb: DataFrame) -> None:
         """Rewrite a stage excluding tombstoned doc_ids (swap via rename).
@@ -219,7 +210,7 @@ class IncrementalIndexer:
                 )
                 changed |= {
                     r["tb"]
-                    for r in segs.select(self._bucket_expr().alias("tb")).distinct().collect()
+                    for r in segs.select(_term_bucket(self.config).alias("tb")).distinct().collect()
                 }
             if tomb is not None:
                 dsegs = self.spark.read.parquet(seg_dir).join(
@@ -227,7 +218,7 @@ class IncrementalIndexer:
                 )
                 changed |= {
                     r["tb"]
-                    for r in dsegs.select(self._bucket_expr().alias("tb")).distinct().collect()
+                    for r in dsegs.select(_term_bucket(self.config).alias("tb")).distinct().collect()
                 }
         if tomb is not None:
             tomb = tomb.persist()

@@ -81,3 +81,66 @@ def test_vectorized_block_encoder_byte_identical_to_reference():
     for col in ref.columns:
         a, b = ref[col].tolist(), got[col].tolist()
         assert a == b, f"column {col} differs"
+
+
+@st.composite
+def _block_postings(draw):
+    """(term, salt, doc_id)-sorted postings of several terms and salt
+    streams, each doc with ascending positions and one payload per
+    occurrence — the rows the block encoder consumes."""
+    rows = []
+    for t in range(draw(st.integers(1, 4))):
+        for salt in sorted(draw(st.sets(st.integers(0, 3), min_size=1, max_size=3))):
+            docs = draw(st.lists(st.integers(0, 2**40), min_size=1, max_size=150, unique=True))
+            for d in sorted(docs):
+                pos = sorted(draw(st.sets(st.integers(0, 2**31 - 1), min_size=1, max_size=5)))
+                pay = draw(st.lists(st.integers(0, 7), min_size=len(pos), max_size=len(pos)))
+                dl = draw(st.integers(len(pos), 2**31 - 1))
+                rows.append((f"t{t}", salt, d, len(pos), dl, pos, pay))
+    return rows
+
+
+@given(_block_postings(), st.integers(1, 40), st.data())
+@settings(max_examples=60, deadline=None)
+def test_decode_blocks_roundtrips_block_encoder(rows, block_size, data):
+    """Multi-term, multi-block postings with positions and payloads,
+    encoded by the production block encoder and decoded by the codec's
+    block kernel, equal the input arrays — also for a batch that starts
+    mid-column (a sliced Arrow batch, as Spark may hand a kernel)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from solr_spark.index.build import _encode_blocks_vec
+    from solr_spark.index.codec import decode_blocks
+
+    pdf = pd.DataFrame(
+        rows, columns=["term", "salt", "doc_id", "tf", "doc_len", "positions", "payloads"]
+    )
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    blocks = _encode_blocks_vec(tbl, block_size, True, True)
+    cut = data.draw(st.integers(0, blocks.num_rows - 1))
+    rb = blocks.slice(cut)
+    got = decode_blocks(
+        rb.column("n_docs"), rb.column("doc_ids_enc"), rb.column("tfs_enc"),
+        rb.column("dls_enc"), rb.column("pos_enc"), rb.column("payloads_enc"),
+    )
+    skip = int(np.asarray(blocks.column("n_docs"))[:cut].sum())
+    exp = pdf.iloc[skip:]
+    assert got.doc_id.tolist() == exp["doc_id"].tolist()
+    assert got.tf.tolist() == exp["tf"].tolist()
+    assert got.dl.tolist() == exp["doc_len"].tolist()
+    assert got.pos.tolist() == [p for ps in exp["positions"] for p in ps]
+    assert got.payload.tolist() == [p for ps in exp["payloads"] for p in ps]
+    assert decode_blocks(
+        rb.column("n_docs"), rb.column("doc_ids_enc"), rb.column("tfs_enc"), rb.column("dls_enc")
+    ).pos is None
+
+
+def test_decode_blocks_rejects_index_without_payloads():
+    import pyarrow as pa
+
+    from solr_spark.index.codec import decode_blocks
+
+    enc = pa.array([varint_encode(np.array([5]))], type=pa.binary())
+    with pytest.raises(ValueError, match="without payloads"):
+        decode_blocks([1], enc, enc, enc, payloads_enc=pa.nulls(1, pa.binary()))

@@ -58,14 +58,10 @@ def test_single_term_plan_has_no_shuffle(engine, index):
     decoded = engine.index.blocks.where(
         F.col("term").isin([s.term for s in stats])
     )
+    from solr_spark.query.engine import decode_postings
+
     generic = (
-        engine._score_decoded(
-            decoded.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-                __import__("solr_spark.query.engine", fromlist=["x"])._decode_blocks_udf(),
-                schema=__import__("solr_spark.query.engine", fromlist=["x"])._DECODED_SCHEMA,
-            ),
-            stats,
-        )
+        engine._score_decoded(decode_postings(decoded), stats)
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score_raw"), F.count("*").alias("n_terms"))
         .orderBy("doc_id")

@@ -278,3 +278,30 @@ def test_doc_expiration_ttl(spark):
     # boundary: expire_at == now is expired (strictly-after survives)
     edge = purge_expired(stamped, "2024-01-22 12:00:00")
     assert edge.count() == 0
+
+
+def test_build_and_append_release_only_their_own_caches(spark, test_config):
+    """Cache ownership: build_index and append_batch unpersist exactly the
+    frame their doc-id assignment persisted — a frame the caller persisted
+    stays cached, and the number of persisted RDDs is back to its value
+    before each call (no evicted caller cache, no leaked id frame)."""
+    d = f"{BASE}/cache_owner"
+    shutil.rmtree(d, ignore_errors=True)
+    jsc = spark.sparkContext._jsc
+    owned = spark.range(16).persist()
+    owned.count()
+
+    def still_cached() -> bool:
+        lvl = owned.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    n0 = jsc.getPersistentRDDs().size()
+    build_index(spark, synth_corpus(spark, 60), f"{d}/build", test_config, resume=False)
+    assert still_cached()
+    assert jsc.getPersistentRDDs().size() == n0
+    inc = IncrementalIndexer(spark, f"{d}/inc", test_config)
+    for n in (30, 20):
+        inc.append_batch(synth_corpus(spark, n), text_col="content")
+        assert still_cached()
+        assert jsc.getPersistentRDDs().size() == n0
+    owned.unpersist()
